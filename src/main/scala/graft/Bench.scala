@@ -153,87 +153,3 @@ object Bench {
     spark.stop()
   }
 }
-
-/** Deser-ceiling measurement: the SAME routing work (stable offset sort +
-  * per-kind extraction of every span) through (a) the typed Dataset path —
-  * full DocIn deserialization, Extract.extractDoc, result reduced to a
-  * count — and (b) the native expression path (graft_extract_spans) that
-  * reads ArrayData/UTF8String directly with no object graph either way.
-  * Both compute the total extracted-span count (cross-checked equal).
-  * Prints one JSON line with both times and us/doc.
-  */
-object DeserBench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_REPL", "40").toInt
-    val repeat = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPEAT", "3").toInt
-    val spark = Bench.session(cpus)
-    import spark.implicits._
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    import org.apache.spark.sql.functions._
-    val path = Bench.corpusPath(spark, sfDir, factor, cpus.toInt * 4)
-
-    def typedRun(): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = spark.read.parquet(path).as[graft.core.DocIn]
-        .map(d => graft.core.route.Extract.extractDoc(d).spans.length.toLong)
-        .reduce(_ + _)
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    def exprRun(): (Long, Double) = {
-      val t0 = System.nanoTime()
-      val n = spark.read.parquet(path)
-        .select(sum(size(call_function("graft_extract_spans", col("spans")))))
-        .first().getLong(0)
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    val nDocs = spark.read.parquet(path).count()
-    typedRun(); exprRun() // full-size JIT warmup for both paths
-    val typed = (1 to repeat).map(_ => typedRun()).minBy(_._2)
-    val expr = (1 to repeat).map(_ => exprRun()).minBy(_._2)
-    require(typed._1 == expr._1, s"span counts diverge: ${typed._1} vs ${expr._1}")
-    val usT = typed._2 * 1e6 / nDocs
-    val usE = expr._2 * 1e6 / nDocs
-    println(s"""{"metric":"deser_paths","unit":"sec","n_docs":$nDocs,"n_spans":${typed._1},"typed_sec":${typed._2},"expr_sec":${expr._2},"typed_us_per_doc":$usT,"expr_us_per_doc":$usE,"speedup":${typed._2 / expr._2},"cpus":$cpus,"sf":"$sfDir","replication":$factor}""")
-    spark.stop()
-  }
-}
-
-/** Scaling-evidence main (the sandbox proxy for the N vs 4N executor rule):
-  * the SAME pipeline job at local[N] and local[4N] on the SAME input,
-  * reporting throughput at both plus efficiency = (thr_4N/thr_N)/4.
-  *
-  * SPARK_GRAFT_SCALE_N picks N (default 2 -> the 2-vs-8 pair). The most
-  * faithful runs pin each level to its core allotment in its own JVM
-  * (`taskset -c 0-(N-1)` around a pipeline-only Bench), so GC/JIT threads
-  * can't borrow idle cores — see BENCH.md; this in-JVM main is the
-  * one-command variant.
-  */
-object Scaling {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("SPARK_GRAFT_REPL", "400").toInt
-    val nLow = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "2").toInt
-    val nHigh = nLow * 4
-    // The two parallelism levels share one JVM, so JIT warmup would bias
-    // whichever runs first; the host also shows steal-time noise. Alternate
-    // rounds and take each level's best run — both levels then measure
-    // fully-warmed code under comparable machine conditions.
-    val rounds = sys.env.getOrElse("SPARK_GRAFT_SCALING_ROUNDS", "5").toInt
-    val lo = nLow.toString; val hi = nHigh.toString
-    var best = Map(lo -> (0L, Double.MaxValue), hi -> (0L, Double.MaxValue))
-    for (r <- 1 to rounds; cpus <- Seq(hi, lo)) {
-      val spark = Bench.session(cpus)
-      val (n, sec) = Bench.pipelineRun(spark, sfDir, factor, cpus.toInt)
-      spark.stop()
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      System.err.println(s"[scaling] round $r local[$cpus]: $sec s")
-      if (sec < best(cpus)._2) best += cpus -> (n, sec)
-    }
-    val (nL, sL) = best(lo); val (nH, sH) = best(hi)
-    val tL = nL / math.max(sL, 1e-9); val tH = nH / math.max(sH, 1e-9)
-    val eff = (tH / tL) / 4.0
-    println(s"""{"metric":"scaling_efficiency","value":$eff,"unit":"ratio","n_docs":$nL,"local$nLow":{"sec":$sL,"docs_per_sec":$tL},"local$nHigh":{"sec":$sH,"docs_per_sec":$tH},"sf":"$sfDir","replication":$factor}""")
-  }
-}

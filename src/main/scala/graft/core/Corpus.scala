@@ -140,13 +140,6 @@ object Corpus {
       })
   }
 
-  /** Memoized per (path, slots): does the scan yield fewer splits than
-    * the cluster has task slots? (The testdata is immutable, so the
-    * planning probe runs once per path, not once per query call.)
-    */
-  private val underParallel =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Scan-parallelism guard (round 6, guide §2.5 input skew): the
     * testdata tables are single small parquet files with ONE row group —
     * a 1-task scan no split conf can widen — standing in for production
@@ -167,14 +160,15 @@ object Corpus {
     * heavy per-row maps (fixture synthesis, real parsing, shingling,
     * signatures — >= ~0.5 ms/row) win 2-4x. Queries whose map work
     * dominates opt in; scan-bound and shuffle-dominated queries read the
-    * raw layout.
+    * raw layout. The split count is probed on every call (file listing
+    * at planning time, no Spark job).
     */
   private def parallelized(spark: SparkSession, path: String, key: String): DataFrame = {
     val df = spark.read.parquet(path)
     val slots = spark.sparkContext.defaultParallelism
-    val under = underParallel.computeIfAbsent(s"$path|$slots",
-      _ => java.lang.Boolean.valueOf(df.rdd.getNumPartitions < slots))
-    if (under) df.repartition(slots, org.apache.spark.sql.functions.col(key)) else df
+    if (df.rdd.getNumPartitions < slots)
+      df.repartition(slots, org.apache.spark.sql.functions.col(key))
+    else df
   }
 
   def documents(spark: SparkSession, sfDir: String): DataFrame =

@@ -49,26 +49,29 @@ object Code32Impl {
 
 /** Session extensions wiring (spark.sql.extensions=graft.functions.GraftExtensions). */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.code32Descriptor)
-    TextFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectFunction(ExtractSpansExpr.descriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftFunctions.descriptors.foreach(ext.injectFunction)
 }
 
 object GraftFunctions {
-  val code32Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("graft_code32"),
-    new ExpressionInfo(classOf[Code32].getName, "graft_code32"),
-    (children: Seq[Expression]) => Code32(children.head)
-  )
+  type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def descriptor(name: String, cls: Class[_], build: Expression => Expression): Descriptor =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+      (cs: Seq[Expression]) => build(cs.head))
+
+  /** Every graft SQL function: the one list both registration paths use. */
+  val descriptors: Seq[Descriptor] = Seq(
+    descriptor("graft_code32", classOf[Code32], Code32(_)),
+    descriptor("graft_simhash32", classOf[Simhash32], Simhash32(_)),
+    descriptor("graft_fingerprint", classOf[Fingerprint], Fingerprint(_)),
+    descriptor("graft_nfc", classOf[Nfc], Nfc(_)))
 
   /** Imperative registration for sessions built without the extensions
     * config (idempotent).
     */
   def ensureRegistered(spark: SparkSession): Unit =
-    (code32Descriptor +: ExtractSpansExpr.descriptor +: TextFunctions.descriptors)
-      .foreach { case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
-      }
+    descriptors.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    }
 }

@@ -205,11 +205,35 @@ object Dedup {
       .groupBy("doc_id").agg(min("eid").as("dup_of"))
   }
 
-  /** Band-bucket occupancy vs the cap — the no-silent-caps record. */
-  def hotBuckets(spark: SparkSession, docs: DataFrame, bucketCap: Int): DataFrame =
-    minhashBuckets(spark, docs)
-      .groupBy("bucket").agg(count(lit(1)).as("n_members"))
-      .withColumn("n_kept", least(col("n_members"), lit(bucketCap.toLong)))
+  /** The no-silent-caps record for [[minhashPairs]]: one row per place
+    * its cap actually drops something, mirroring
+    * [[graft.multimodal.Phash.hotBuckets]]. The cap binds at two levels,
+    * and `n_members` counts the unit it binds on there:
+    *  - `level = "group"`, `key` = a distinct signature: its members
+    *    beyond the cap lose all their pairs;
+    *  - `level = "bucket"`, `key` = a band key: its distinct-signature
+    *    representatives beyond the cap lose the cross-group candidates
+    *    this bucket would have proposed.
+    * `n_kept` is the cap. Only over-cap rows are emitted, so an empty
+    * frame means nothing was dropped — however many members share a
+    * bucket through a few signatures.
+    */
+  def hotBuckets(spark: SparkSession, docs: DataFrame, bucketCap: Int): DataFrame = {
+    import spark.implicits._
+    val groups = docs.select("doc_id", "text").as[(Long, String)]
+      .map { case (id, t) =>
+        val sig = minhashSig(t)
+        (sig.mkString(","), bandKeys(sig), id)
+      }.toDF("sig", "bands", "doc_id")
+      .groupBy("sig").agg(count(lit(1)).as("n_members"), first("bands").as("bands"))
+    val bySignature = groups.select(lit("group").as("level"), col("sig").as("key"), col("n_members"))
+    val byBucket = groups.select(explode(col("bands")).as("key"))
+      .groupBy("key").agg(count(lit(1)).as("n_members"))
+      .select(lit("bucket").as("level"), col("key"), col("n_members"))
+    bySignature.unionByName(byBucket)
+      .filter(col("n_members") > bucketCap)
+      .withColumn("n_kept", lit(bucketCap.toLong))
+  }
 
   /** SimHash signatures (map-only; one row per doc). */
   def simhash(spark: SparkSession, docs: DataFrame): DataFrame = {
@@ -244,6 +268,10 @@ object Dedup {
     *
     * Emits (a=probe, b, inter, uni) where 5*inter >= uni (Jaccard >= 0.2)
     * over the rare-shingle profile, a != b. Integer-only output.
+    *
+    * `probe` must be a DOCUMENT-level predicate over the columns of `docs`
+    * (e.g. on `doc_id`): it is applied to `docs` before shingling, so it
+    * cannot reference `shingle` or any other column this operator derives.
     */
   def ngramJaccard(spark: SparkSession, docs: DataFrame,
                    dfCap: Long = Long.MaxValue,
@@ -449,15 +477,19 @@ object Dedup {
     * applied to iterative CC): the pair frame is checkpointed and counted
     * ONCE (the count doubles as the materializing action, so neither path
     * recomputes the upstream pair generation), and when the edge count is
-    * within `localEdgeMax` (default 2^20 — 16 MB of (long,long) rows, the
-    * same bounded-driver-collect class as the IVF seed quantizer and the
-    * Bloom bitmap literal) the components come from a driver-side
+    * within `localEdgeMax` the components come from a driver-side
     * union-find instead of 2+ label-propagation rounds of ~6 tiny
     * exchanges each. Identical min-label output by construction; the
     * distributed loop is unchanged above the bound, and with the round-6
     * rep-collapse upstream the graph CC sees is distinct-signature-sized,
     * not member-sized. Pass localEdgeMax = 0 to force the distributed
     * path (tests do).
+    *
+    * The fast-path bound (default 2^20) counts the rows of the pair frame
+    * as given, before any dedup, so duplicate pairs count against it. The
+    * driver collect holds those rows as `GenericRow`s of two boxed longs,
+    * roughly 80-90 B each (~90 MB at the default), not 16 B of packed
+    * (long,long) data; the union-find's boxed `HashMap` comes on top.
     *
     * Input: pair columns (a, b). Output: (doc_id, component) for every
     * endpoint, component = smallest doc_id reachable.

@@ -278,4 +278,29 @@ class OpsPlanSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange"),
       s"chunking must not shuffle:\n${plan.take(1500)}")
   }
+
+  test("threshold -1: no O(corpus) side is broadcast-pinned, only the hinted df-cap hot set") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // a broadcast HINT still broadcasts at threshold -1; a stats-driven
+    // choice falls back to a shuffle join, as it must at corpus scale
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "-1")
+      def broadcasts(q: String): Seq[BroadcastExchangeExec] =
+        aqe.collect(Queries.all(q)(spark, sf).queryExecution.executedPlan) {
+          case b: BroadcastExchangeExec => b
+        }
+      assert(broadcasts("q_ocr_cache").isEmpty)
+      assert(broadcasts("q_dedup_edit").isEmpty)
+      // the hot set (shingles with df > cap) is bounded by construction;
+      // the per-document `sizes` side joins with no hint
+      val jaccard = broadcasts("q_dedup_jaccard")
+      assert(jaccard.nonEmpty)
+      assert(jaccard.forall(_.child.output.map(_.name) == Seq("shingle")),
+        jaccard.map(_.child.treeString).mkString("\n"))
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

@@ -57,6 +57,34 @@ class SkewSpec extends AnyFunSuite {
     assert(hot.filter(col("n_members") > col("n_kept")).count() > 0)
   }
 
+  test("hotBuckets reports only what the cap drops: 3 signatures x 50k members in one bucket") {
+    import graft.operators.Dedup
+    // three distinct signatures sharing a band bucket: one base text and
+    // variants that differ by their last word
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    val texts = (base +: (0 until 50).map(k => s"$base v$k"))
+      .map(t => t -> Dedup.minhashSig(t).mkString(","))
+      .distinctBy(_._2)
+    val baseBands = Dedup.bandKeys(Dedup.minhashSig(base)).toSet
+    val three = texts.filter { case (t, _) =>
+      Dedup.bandKeys(Dedup.minhashSig(t)).exists(baseBands)
+    }.take(3).map(_._1)
+    assert(three.length == 3, "fixture needs 3 signatures sharing a bucket")
+    val docs = spark.range(50000).select(col("id").as("doc_id"),
+      element_at(array(three.map(lit): _*), (col("id") % 3 + 1).cast("int")).as("text"))
+    // every group (~16.7k members) and the shared bucket (3 signatures)
+    // are under the cap: nothing is dropped, so nothing is reported
+    assert(Dedup.hotBuckets(spark, docs, 20000).collect().isEmpty)
+    // cap 2: each group loses members, and the shared bucket loses one of
+    // its 3 signature representatives
+    val hot = Dedup.hotBuckets(spark, docs, 2).collect()
+      .map(r => (r.getAs[String]("level"), r.getAs[Long]("n_members"), r.getAs[Long]("n_kept")))
+    assert(hot.count(_._1 == "group") == 3)
+    assert(hot.filter(_._1 == "group").map(_._2).sum == 50000L)
+    assert(hot.exists(_ == (("bucket", 3L, 2L))))
+    assert(hot.forall { case (_, n, kept) => n > kept })
+  }
+
   test("minhashPairs signature-collapsed banding emits the identical pair set (uncapped)") {
     import spark.implicits._
     import graft.operators.Dedup
