@@ -49,7 +49,8 @@ object SnapshotTable {
 
   def currentVersion(table: String): Option[Long] = snapshots(table).lastOption
 
-  private def readManifest(table: String, version: Long): Seq[String] = {
+  /** Data dir ids (names under `data/`) visible at `version`, oldest first. */
+  def snapshotDirs(table: String, version: Long): Seq[String] = {
     val content = Files.readString(snapDir(table).resolve(s"v$version"))
     content.split('\n').map(_.trim).filter(_.nonEmpty).toSeq
   }
@@ -60,7 +61,7 @@ object SnapshotTable {
   def read(spark: SparkSession, table: String, snapshot: Option[Long] = None): DataFrame = {
     val v = snapshot.orElse(currentVersion(table))
       .getOrElse(throw new IllegalStateException(s"no snapshots in $table"))
-    val dirs = readManifest(table, v).map(n => dataDir(table).resolve(n).toString)
+    val dirs = snapshotDirs(table, v).map(n => dataDir(table).resolve(n).toString)
     spark.read.parquet(dirs: _*)
   }
 
@@ -111,7 +112,7 @@ object SnapshotTable {
     var attempt = 0
     while (attempt < maxRetries) {
       val cur = currentVersion(table)
-      val curDirs = cur.map(readManifest(table, _)).getOrElse(Seq.empty)
+      val curDirs = cur.map(snapshotDirs(table, _)).getOrElse(Seq.empty)
       val expected = cur.getOrElse(0L)
       if (commitIf(table, expected, nextDirs(curDirs), beforePublish))
         return expected + 1

@@ -1,8 +1,9 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotTable
 import graft.core._
 import graft.core.route.Extract
 
@@ -10,7 +11,7 @@ import graft.core.route.Extract
   *
   * read spans table -> anti-join lineage (exact resume) -> salted
   * repartition on doc_id (skew handling) -> mapPartitions(extract) ->
-  * write extracted spans + lineage + per-partition checkpoint manifests.
+  * append one combined (doc, lineage) data dir and publish a snapshot.
   *
   * Scale design (the 100 TB story):
   *  - ONE shuffle in the whole job (the salted repartition), moving only
@@ -18,7 +19,7 @@ import graft.core.route.Extract
   *    against the narrow terminal-id projection of the lineage table;
   *  - ONE extraction pass: doc rows and lineage rows are emitted together
   *    from the same mapPartitions and written once as a combined table
-  *    (two nullable structs); `extracted/` and `lineage/` are then cheap
+  *    (two nullable structs); `extracted` and `lineage` are then cheap
   *    columnar re-projections (on Iceberg they would simply be views);
   *  - skew: a 10-GB-span document can't be split by Spark, so rows are
   *    salted by a cheap size estimate — oversized docs spread across the
@@ -26,9 +27,9 @@ import graft.core.route.Extract
   *    (`Extractor.java:142-146`) lifted to partition level;
   *  - lineage rows carry per-partition docs/sec and bytes/sec (north rule)
   *    from monotonic nanoTime deltas inside the partition;
-  *  - checkpoint manifests: one row per partition derived from the lineage
-  *    that actually landed (read back after commit), so a re-run can prove
-  *    which partitions committed — Iceberg snapshot-commit analog;
+  *  - commit: the output dir is a [[graft.catalog.SnapshotTable]]; the
+  *    snapshot publish makes a run visible, and per-partition checkpoints
+  *    are a read-time view of the lineage that landed;
   *  - resume is idempotent: re-running after a partial failure re-extracts
   *    only docs without terminal lineage (Reporter.skip semantics,
   *    `Reporter.java:120-135`).
@@ -106,147 +107,6 @@ object ExtractJob {
       .drop("_sz", "_salt").as[DocIn]
   }
 
-  /** Span-parallel extraction — the real skew answer for a GIANT document
-    * (SURVEY §7.4 hard part 4: one 10-GB-spans row cannot be split by
-    * Spark's row-level parallelism). The document's SPANS are exploded to
-    * individual rows, spread across partitions by (doc_id, offset) — this
-    * is the salted repartitioning that actually distributes one document's
-    * work — extracted span-locally, and reassembled per doc_id with order
-    * restored from offsets. Output is byte-identical to [[Extract.explode]]
-    * (asserted in tests); cost is one extra shuffle, so it is the path for
-    * the oversized tail, not the default.
-    */
-  /** Span-parallel row type flowing from the parse stage into reassembly. */
-  private type SpanRow = (Long, String, String, String, Int, Int, String, String, String, String, Long)
-  // fields: (doc_id, kind, extractedText, media_ref, offset, idx(-1=sentinel),
-  //          rawMedia, reason, failStatus, failMsg, bytesIn)
-
-  /** As the batch path, a failing span yields a CLASSIFIED lineage row for
-    * its document, never a task failure — for non-timeout failures the
-    * batch path aborts a doc at its first failing span in (offset, index)
-    * order, and reassembly picks exactly that span's classification, so
-    * the two paths agree on status. TIMEOUT semantics necessarily differ:
-    * a document's spans run on different executors, so no per-doc wall
-    * clock exists — here each SPAN gets the doc budget (checked after its
-    * parse), which still bounds any single runaway parse but can time out
-    * docs the batch path would pass and vice versa.
-    * Returns the combined (doc, lineage) rows like [[extractPartitions]];
-    * lineage throughput rates are 0 in this path (rates are per-partition
-    * wall-clock figures, meaningless after the reassembly shuffle).
-    */
-  def extractSpanParallel(input: Dataset[DocIn], cfg: JobConfig)
-  : Dataset[(Option[DocOut], Option[LineageRow])] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    input
-      .flatMap { d =>
-        val spans = Extract.spansOrEmpty(d)
-        if (spans.isEmpty)
-          // sentinel keeps span-less docs visible to the reassembly;
-          // idx = -1 can never collide with a real span (array positions
-          // are >= 0 — an offset-based sentinel could collide with data)
-          Iterator.single((d.doc_id, "", "", "", 0, -1))
-        else Iterator.tabulate(spans.length) { idx =>
-          // idx = position in the input span array: the secondary sort key
-          // that makes reassembly deterministic under duplicate offsets
-          // (extractDoc's STABLE sortBy ties break on array order)
-          val s = spans(idx)
-          (d.doc_id, s.kind, s.text, if (s.media_ref == null) "" else s.media_ref, s.offset, idx)
-        }
-      }
-      .repartition(cfg.partitions, col("_1"), col("_5"))
-      .as[(Long, String, String, String, Int, Int)]
-      .map[SpanRow] { case (id, kind, text, ref, off, idx) =>
-        if (idx < 0) { // sentinel: no parse work, reassembly drops it anyway
-          (id, kind, "", ref, off, idx, "", "", "", "", 0L)
-        } else {
-        val bytesIn = if (text == null) 0L else text.length.toLong
-        val deadline =
-          if (cfg.docTimeoutMillis > 0) System.nanoTime() + cfg.docTimeoutMillis * 1000000L
-          else Long.MaxValue
-        val (txt, why, failStatus, failMsg) =
-          try {
-            val r = Extract.extractSpan(kind, text, cfg.extract)
-            // cooperative deadline, checked at the span boundary
-            if (deadline != Long.MaxValue && System.nanoTime() > deadline)
-              throw new graft.core.ExtractTimeout("span deadline exceeded")
-            (r._1, r._2, "", "")
-          } catch {
-            case e: VirtualMachineError => throw e
-            case e: Exception => ("", "", classify(e), String.valueOf(e.getMessage))
-          }
-        // raw container content (media/zip/gzip) rides along: children need
-        // it for ids/spawning at reassembly
-        val raw = if (Extract.ContainerKinds(kind)) { if (text == null) "" else text } else ""
-        (id, kind, txt, ref, off, idx, raw, why, failStatus, failMsg, bytesIn)
-        }
-      }
-      .groupByKey(_._1)
-      .flatMapGroups { (id: Long, it: Iterator[SpanRow]) =>
-        // total order (offset, input index) == extractDoc's stable offset sort
-        val all = it.toArray.filter(_._6 >= 0).sortBy(r => (r._5, r._6))
-        val bytesIn = all.iterator.map(_._11).sum
-        val rows = all.take(cfg.extract.maxSpans)
-        // batch parity: the FIRST failing span among the CAPPED rows (in
-        // sorted order) classifies the whole document — extractDoc likewise
-        // loops over sortBy(_.offset).take(maxSpans), so a failing span
-        // beyond the cap is invisible to both paths
-        val firstFail = rows.iterator.find(_._9.nonEmpty)
-        firstFail match {
-          case Some(f) =>
-            val lrow = LineageRow(id, -1, f._9, f._10, all.length, 0, bytesIn, 0.0, 0.0)
-            Iterator.single((Option.empty[DocOut], Option(lrow)))
-          case None =>
-            var anyContent = false
-            var anyEncrypted = false
-            val spans = new Array[SpanOut](rows.length)
-            var i = 0
-            while (i < rows.length) {
-              val row = rows(i)
-              if (row._3.nonEmpty) anyContent = true
-              if (row._8 == Reason.Encrypted) anyEncrypted = true
-              spans(i) = SpanOut(row._2, row._3, row._4, i)
-              i += 1
-            }
-            val reason =
-              if (!anyContent && anyEncrypted) Reason.Encrypted
-              else if (rows.isEmpty || !anyContent) Reason.Empty
-              else ""
-            val rid = graft.core.Ids.rootId(id)
-            val root = DocOut(rid, "", rid, 0, spans, reason)
-            // media children spawn from ALL media spans (pre-cap), matching
-            // explodeCounted, which derives mediaContents from the full array.
-            // Same never-a-task-failure contract as the per-span parse stage:
-            // an exception while spawning embeds classifies the DOCUMENT
-            // (the batch path wraps the whole explodeCounted the same way).
-            val containerContents = all.iterator
-              .filter(r => Extract.ContainerKinds(r._2)).map(r => (r._2, r._7)).toSeq
-            val spawned =
-              try Right(Extract.spawnContainers(containerContents, rid, cfg.extract))
-              catch {
-                case e: VirtualMachineError => throw e
-                case e: Exception => Left(e)
-              }
-            spawned match {
-              case Left(e) =>
-                val lrow = LineageRow(id, -1, classify(e),
-                  String.valueOf(e.getMessage), all.length, 0, bytesIn, 0.0, 0.0)
-                Iterator.single((Option.empty[DocOut], Option(lrow)))
-              case Right((children, skipped)) =>
-                val status = if (reason == Reason.Encrypted) Status.NotDecrypted else Status.Success
-                val nOut = spans.length + children.iterator.map(_.spans.length).sum
-                val err = if (skipped > 0) s"embeds_skipped=$skipped" else ""
-                val lrow = LineageRow(id, -1, status, err, all.length, nOut, bytesIn, 0.0, 0.0)
-                val docRows =
-                  if (status == Status.Success)
-                    (Iterator.single(root) ++ children.iterator).map(o => (Option(o), Option.empty[LineageRow]))
-                  else Iterator.empty
-                docRows ++ Iterator.single((Option.empty[DocOut], Option(lrow)))
-            }
-        }
-      }
-  }
-
   /** The core typed transformation, ONE pass: per-partition batched
     * extraction emitting doc rows (Some(doc), None) and one lineage row
     * (None, Some(lineage)) per input document. A poison row yields a
@@ -313,130 +173,69 @@ object ExtractJob {
 
   // ------------------------------------------------ incremental commit ----
   //
-  // The commit protocol is INCREMENTAL (Iceberg-snapshot analog on plain
-  // parquet): run N+1 writes O(run N+1) bytes, never a rewrite of history.
-  //
-  //  1. extraction writes ONE combined table into a run-scoped directory —
-  //     the atomic unit (parquet job commit); run dirs are append-only and
-  //     are the source of truth;
-  //  2. a one-row-per-run MANIFEST is appended AFTER the run dir commits —
-  //     the snapshot pointer. Readers resolve only manifested runs, so a
-  //     crash mid-run leaves an invisible orphan dir, never a torn read;
-  //  3. `extracted` and `lineage` are READ-TIME VIEWS over the manifested
-  //     run dirs (on Iceberg: actual views / MERGE): extracted dedupes on
-  //     doc_id at read (re-extracted rows are bit-identical by determinism,
-  //     and only retried non-terminal docs ever recur); lineage keeps every
-  //     attempt (it is a log — retries are part of the record);
-  //  4. checkpoint manifests carry (run_id, partition_id) so each run's
-  //     committed partitions are provable — appended, never rewritten.
+  // `outDir` is a [[SnapshotTable]] (the Iceberg stand-in): each run writes
+  // ONE combined (doc, lineage) data dir `data/<id>` and publishes snapshot
+  // `snapshots/v<N>` listing every committed dir. The hard-link publish is
+  // the commit point: a dir written before a crash is never listed, so no
+  // reader sees it, and a writer that loses the race to v<N> re-publishes
+  // on top of the winner. Run N+1 writes O(run N+1) bytes and never
+  // rewrites history. `extracted` and `lineage` are read-time views of the
+  // current snapshot (on Iceberg: actual views / MERGE): extracted dedupes
+  // on doc_id (re-extracted rows are bit-identical by determinism, and only
+  // retried non-terminal docs ever recur); lineage keeps every attempt (it
+  // is a log — retries are part of the record).
 
-  /** Run ids recorded as committed, oldest-first. The manifest is one row
-    * per run — driver-side materialization stays trivial at any data scale.
+  /** Data dir ids of the current snapshot, oldest first — one read of the
+    * snapshot file, no Spark job.
     */
-  def committedRuns(spark: SparkSession, outDir: String): Seq[String] = {
-    val p = new java.io.File(s"$outDir/manifest")
-    if (!p.exists()) Seq.empty
-    else spark.read.parquet(p.getPath)
-      .filter(col("committed"))
-      .select("run_id", "seq").distinct()
-      .collect().sortBy(_.getLong(1)).map(_.getString(0)).toSeq
-  }
+  def committedRuns(spark: SparkSession, outDir: String): Seq[String] =
+    SnapshotTable.currentVersion(outDir).map(SnapshotTable.snapshotDirs(outDir, _)).getOrElse(Seq.empty)
 
-  /** The combined (doc, lineage) union over committed runs only. */
-  def readCombined(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val dirs = committedRuns(spark, outDir).map(r => s"$outDir/combined/run-$r")
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
+  /** The combined (doc, lineage) rows of the current snapshot; None for a
+    * dir no run has committed to.
+    */
+  def readCombined(spark: SparkSession, outDir: String): Option[DataFrame] =
+    SnapshotTable.currentVersion(outDir).map(v => SnapshotTable.read(spark, outDir, Some(v)))
+
+  private def extractedOf(combined: DataFrame): DataFrame =
+    combined.filter(col("doc").isNotNull).select("doc.*").dropDuplicates("doc_id")
+
+  private def lineageOf(combined: DataFrame): DataFrame =
+    combined.filter(col("lineage").isNotNull).select("lineage.*")
 
   /** `extracted` as a read-time view: committed docs, dedup-on-read. */
   def readExtracted(spark: SparkSession, outDir: String): Option[DataFrame] =
-    readCombined(spark, outDir).map(
-      _.filter(col("doc").isNotNull).select("doc.*").dropDuplicates("doc_id"))
+    readCombined(spark, outDir).map(extractedOf)
 
   /** `lineage` as a read-time view: the full attempt log. */
   def readLineage(spark: SparkSession, outDir: String): Option[DataFrame] =
-    readCombined(spark, outDir).map(
-      _.filter(col("lineage").isNotNull).select("lineage.*"))
+    readCombined(spark, outDir).map(lineageOf)
 
-  /** Per-partition checkpoint rows of COMMITTED runs only: orphan-run
-    * checkpoint rows (a crash window, or rows from a racing writer) are
-    * filtered against the manifest exactly like orphan run dirs — the
-    * "provable committed partitions" surface never overstates.
+  /** Per-partition checkpoints `(run_id, partition_id, n_docs, n_spans)` of
+    * committed runs, derived at read time from the lineage that landed; the
+    * run id is the data dir id [[committedRuns]] lists (the dir holding the
+    * row's parquet file).
     */
-  def readCheckpoints(spark: SparkSession, outDir: String): Option[DataFrame] = {
-    val p = new java.io.File(s"$outDir/checkpoints")
-    if (!p.exists()) None
-    else {
-      val committed = committedRuns(spark, outDir)
-      Some(spark.read.parquet(p.getPath)
-        .filter(col("run_id").isin(committed: _*)))
-    }
-  }
+  def readCheckpoints(spark: SparkSession, outDir: String): Option[DataFrame] =
+    readCombined(spark, outDir).map(_.filter(col("lineage").isNotNull)
+      .groupBy(regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+$", 1).as("run_id"),
+        col("lineage.partition_id").as("partition_id"))
+      .agg(count(lit(1)).as("n_docs"), sum("lineage.n_spans_out").as("n_spans")))
 
   /** End-to-end incremental run (commit protocol above). Resumes against
     * `lineagePrev` when given, else against the output's own lineage view —
     * the Reporter.skip semantics (`Reporter.java:120-135`). Returns (total
-    * docs in the extracted view, total lineage rows) across ALL runs.
+    * docs in the extracted view, total lineage rows) across all runs in the
+    * snapshot this run published.
     */
   def run(spark: SparkSession, input: Dataset[DocIn], lineagePrev: Option[DataFrame],
           outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) = {
     val lineageView = lineagePrev.orElse(readLineage(spark, outDir))
     val pending = lineageView.map(resume(input, _)).getOrElse(input)
-    val parted = prepare(pending, cfg)
-
-    val prior = committedRuns(spark, outDir)
-    val runId = java.util.UUID.randomUUID.toString.take(8)
-    val runDir = s"$outDir/combined/run-$runId"
-    extractPartitions(parted, cfg).toDF("doc", "lineage")
-      .write.mode(SaveMode.Overwrite).parquet(runDir)
-
-    // per-partition checkpoint rows for THIS run only (O(run), appended) —
-    // written BEFORE the manifest: a crash between the two leaves orphan
-    // checkpoint rows for an uncommitted run, which readCheckpoints filters
-    // against the manifest exactly like orphan run dirs. (Writing them
-    // after the manifest instead would make the asymmetric failure
-    // PERMANENT: a committed, visible run forever missing its checkpoint
-    // proof, with no read-side repair possible.)
-    spark.read.parquet(runDir)
-      .filter(col("lineage").isNotNull).select("lineage.*")
-      .groupBy(col("partition_id"))
-      .agg(count(lit(1)).as("n_docs"), sum("n_spans_out").as("n_spans"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("committed", lit(true))
-      .write.mode(SaveMode.Append).parquet(s"$outDir/checkpoints")
-
-    // the commit point: one manifest row makes the run visible to readers
-    import spark.implicits._
-    Seq((runId, prior.size.toLong, true)).toDF("run_id", "seq", "committed")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(s"$outDir/manifest")
-
-    val nd = readExtracted(spark, outDir).map(_.count()).getOrElse(0L)
-    val nl = readLineage(spark, outDir).map(_.count()).getOrElse(0L)
-    (nd, nl)
-  }
-
-  /** [[run]] variant writing through the snapshot-table layer
-    * ([[graft.catalog.SnapshotTable]] — the Iceberg stand-in): each run
-    * appends ONE immutable data dir and publishes one snapshot; resume
-    * reads the current snapshot's lineage view. Same O(run N+1) write cost;
-    * the commit point is the table layer's optimistic snapshot publish, so
-    * racing writers are detected instead of silently interleaving (the
-    * plain-dir protocol in [[run]] assumes a single writer).
-    */
-  def runSnapshot(spark: SparkSession, input: Dataset[DocIn], table: String,
-                  cfg: JobConfig = JobConfig()): (Long, Long) = {
-    import graft.catalog.SnapshotTable
-    val lineagePrev =
-      if (SnapshotTable.snapshots(table).isEmpty) None
-      else Some(SnapshotTable.read(spark, table)
-        .filter(col("lineage").isNotNull).select("lineage.*"))
-    val pending = lineagePrev.map(resume(input, _)).getOrElse(input)
     val combined = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
-    SnapshotTable.append(spark, table, combined)
-    val all = SnapshotTable.read(spark, table)
-    (all.filter(col("doc").isNotNull).select("doc.*").dropDuplicates("doc_id").count(),
-      all.filter(col("lineage").isNotNull).count())
+    val published = SnapshotTable.append(spark, outDir, combined)
+    val all = SnapshotTable.read(spark, outDir, Some(published))
+    (extractedOf(all).count(), lineageOf(all).count())
   }
 
   /** Throughput-only variant for the bench harness: same plan shape, no

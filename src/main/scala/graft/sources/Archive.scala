@@ -440,11 +440,15 @@ object Archive {
 
   /** Decode a .Z stream (LZW, LSB-first codes, the compress(1) 8-code
     * group alignment quirk) via commons-compress on the Spark classpath.
+    * Decoder memory is HARD-CAPPED at 64 MiB like [[unxz]]: the third
+    * header byte sets the LZW table width, and a crafted width would ask
+    * for gigabytes before the first code; compress(1) never writes more
+    * than 16 bits (384 KiB).
     */
   def uncompressZ(bytes: Array[Byte], maxBytes: Int): (String, Option[Array[Byte]]) =
     try {
       val zis = new org.apache.commons.compress.compressors.z.ZCompressorInputStream(
-        new ByteArrayInputStream(bytes))
+        new ByteArrayInputStream(bytes), 64 * 1024)
       try ("", readCapped(zis, maxBytes))
       finally zis.close()
     } catch {

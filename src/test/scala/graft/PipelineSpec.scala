@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.catalog.SnapshotTable
 import graft.core._
 import graft.pipeline.ExtractJob
 
@@ -28,9 +29,10 @@ class PipelineSpec extends AnyFunSuite {
     val lineage = ExtractJob.readLineage(spark, out).get
     assert(lineage.filter(col("status") === Status.Success).count() == 30)
     assert(lineage.filter(col("docs_per_sec") > 0).count() == 30)
-    val ckpt = spark.read.parquet(s"$out/checkpoints")
-    assert(ckpt.filter(col("committed")).count() > 0)
+    val ckpt = ExtractJob.readCheckpoints(spark, out).get
     assert(ckpt.agg(sum("n_docs")).first().getLong(0) == 30)
+    assert(ckpt.select("run_id").distinct().collect().map(_.getString(0)).toSeq ==
+      ExtractJob.committedRuns(spark, out).take(1))
   }
 
   test("incremental commit: run N+1 writes O(run N+1), never rewrites history") {
@@ -39,7 +41,7 @@ class PipelineSpec extends AnyFunSuite {
     val run1 = ExtractJob.committedRuns(spark, out)
     assert(run1.size == 1)
     def snapshot(runId: String): Map[String, Long] = {
-      val d = new java.io.File(s"$out/combined/run-$runId")
+      val d = new java.io.File(s"$out/data/$runId")
       d.listFiles().map(f => f.getName -> f.lastModified()).toMap
     }
     val before = snapshot(run1.head)
@@ -51,7 +53,7 @@ class PipelineSpec extends AnyFunSuite {
     // history untouched: same files, same mtimes in run 1's dir
     assert(snapshot(run1.head) == before)
     // run 2's own dir holds exactly the 10 new docs' lineage
-    val run2Dir = s"$out/combined/run-${runs2(1)}"
+    val run2Dir = s"$out/data/${runs2(1)}"
     val run2Lineage = spark.read.parquet(run2Dir)
       .filter(col("lineage").isNotNull).select("lineage.*")
     assert(run2Lineage.count() == 10)
@@ -60,37 +62,56 @@ class PipelineSpec extends AnyFunSuite {
     assert(nl2 == 20)
     assert(ExtractJob.readExtracted(spark, out).get
       .filter(col("level") === 0).count() == 20)
+    // time travel: snapshot 1 still shows only run 1's lineage
+    assert(SnapshotTable.read(spark, out, Some(1))
+      .filter(col("lineage").isNotNull).count() == 10)
 
     // run 3 over the same input: nothing pending, still O(nothing)
     val (nd3, nl3) = ExtractJob.run(spark, corpus(20), None, out)
     assert(nl3 == 20 && nd3 == nd2)
   }
 
-  test("snapshot-table runs: incremental appends, resume from the snapshot view") {
-    val table = tmpDir() + "/tbl"
-    val (nd1, nl1) = ExtractJob.runSnapshot(spark, corpus(10), table)
-    assert(nl1 == 10)
-    val (nd2, nl2) = ExtractJob.runSnapshot(spark, corpus(20), table)
-    assert(nl2 == 20) // only the 10 new docs extracted on run 2
-    assert(graft.catalog.SnapshotTable.snapshots(table) == Seq(1L, 2L))
-    // time travel: run 1's view still shows only the first 10 docs' lineage
-    val v1 = graft.catalog.SnapshotTable.read(spark, table, Some(1))
-    assert(v1.filter(col("lineage").isNotNull).count() == 10)
-    // idempotent third run over the same input
-    val (_, nl3) = ExtractJob.runSnapshot(spark, corpus(20), table)
-    assert(nl3 == 20)
-  }
-
   test("crash-orphaned run dir (no manifest row) is invisible to readers") {
     val out = tmpDir()
     ExtractJob.run(spark, corpus(5), None, out)
-    // simulate a crash after the run-dir write but before the manifest
-    // append: a bare run dir with no manifest row
+    // simulate a crash after the data-dir write but before the snapshot
+    // publish: a data dir no snapshot lists
     ExtractJob.extractPartitions(corpus(8), ExtractJob.JobConfig())
       .toDF("doc", "lineage")
-      .write.mode("overwrite").parquet(s"$out/combined/run-orphan99")
+      .write.mode("overwrite").parquet(s"$out/data/orphan99")
     assert(ExtractJob.committedRuns(spark, out).size == 1)
     assert(ExtractJob.readLineage(spark, out).get.count() == 5)
+  }
+
+  test("resolving committed runs reads the snapshot file and runs no Spark job") {
+    val out = tmpDir()
+    ExtractJob.run(spark, corpus(5), None, out)
+    ExtractJob.run(spark, corpus(10), None, out)
+    val (runs, jobs) = JobCount(spark)(ExtractJob.committedRuns(spark, out))
+    assert(runs.size == 2)
+    assert(jobs == 0)
+  }
+
+  test("racing writers over disjoint docs both land as snapshots") {
+    import spark.implicits._
+    val out = tmpDir()
+    def docs(ids: Range) = spark.createDataset(ids.map(i =>
+      Corpus.synthesizeOne(i.toLong, s"alpha bravo charlie unit$i")))
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val writers = Seq(0 until 12, 100 until 112).map(ids =>
+        pool.submit(new Callable[(Long, Long)] {
+          def call(): (Long, Long) = { start.await(); ExtractJob.run(spark, docs(ids), None, out) }
+        }))
+      start.countDown()
+      writers.foreach(_.get(5, TimeUnit.MINUTES)) // rethrows a writer's failure
+    } finally pool.shutdown()
+    assert(SnapshotTable.snapshots(out) == Seq(1L, 2L))
+    assert(ExtractJob.committedRuns(spark, out).size == 2)
+    val ids = ExtractJob.readLineage(spark, out).get.select("doc_id").as[Long].collect().sorted.toSeq
+    assert(ids == (0L until 12L) ++ (100L until 112L))
   }
 
   test("resume skips terminal statuses and retries the rest") {
@@ -128,7 +149,7 @@ class PipelineSpec extends AnyFunSuite {
     val lineages = res.flatMap(_._2)
     def st(id: Long) = lineages.find(_.doc_id == id).get.status
     assert(st(1) == Status.Success)
-    assert(st(2) == Status.Success) // graceful empty, aligned with span-parallel
+    assert(st(2) == Status.Success) // graceful empty, never a failure
     assert(st(3) == Status.NotDecrypted)
     assert(st(4) == Status.NotParsed)
     assert(st(5) == Status.NotFound)
@@ -171,50 +192,6 @@ class PipelineSpec extends AnyFunSuite {
     val parted = ExtractJob.saltedRepartition(docs, cfg)
     assert(parted.count() == 51)
     assert(parted.rdd.getNumPartitions == 8)
-  }
-
-  test("span-parallel extraction equals the per-doc path exactly (giant-doc skew)") {
-    import spark.implicits._
-    // mixed corpus incl. chain containers, content-less media, bin junk,
-    // encrypted spans
-    val docs = (0 until 60).map(i =>
-      Corpus.synthesizeOne(i.toLong, "a b c d e f g h i j k l m n")) :+
-      DocIn(900, Array(SpanIn("pdf", "ENCRYPTED:x", "", 0))) :+
-      DocIn(901, Array.empty[SpanIn])
-    val ds = spark.createDataset(docs)
-    def norm(d: DocOut) = (d.doc_id, d.parent_id, d.root_id, d.level,
-      d.spans.toSeq, d.no_content_reason)
-    val res = ExtractJob.extractSpanParallel(ds, ExtractJob.JobConfig(partitions = 6)).collect()
-    val viaSpans = res.flatMap(_._1).map(norm).toSet
-    // batch parity for DOC rows: only SUCCESS docs emit rows, so the
-    // encrypted doc 900 (NOT_DECRYPTED) contributes lineage only
-    val viaDocs = docs.filter(_.doc_id != 900)
-      .flatMap(d => graft.core.route.Extract.explode(d)).map(norm).toSet
-    assert(viaSpans == viaDocs)
-    val lineages = res.flatMap(_._2)
-    assert(lineages.length == docs.length) // one lineage row per input doc
-    assert(lineages.find(_.doc_id == 900).get.status == Status.NotDecrypted)
-    assert(lineages.find(_.doc_id == 901).get.status == Status.Success)
-  }
-
-  test("span-parallel path classifies failing spans instead of failing the job") {
-    import spark.implicits._
-    val docs = Seq(
-      DocIn(1, Array(SpanIn("text", "fine", "", 0))),
-      DocIn(2, Array(SpanIn("text", "ok", "", 0), SpanIn("html", "POISON:x", "", 1))),
-      DocIn(3, Array(SpanIn("media", "MISSING:ref", "", 0))),
-      // SLOW span overruns its 20ms budget -> per-span deadline -> TIMEOUT
-      DocIn(4, Array(SpanIn("text", "SLOW:100", "", 0))))
-    val cfg = ExtractJob.JobConfig(partitions = 4, docTimeoutMillis = 20)
-    val res = ExtractJob.extractSpanParallel(spark.createDataset(docs), cfg).collect()
-    val st = res.flatMap(_._2).map(l => l.doc_id -> l.status).toMap
-    assert(st(1L) == Status.Success)
-    assert(st(2L) == Status.NotParsed)
-    assert(st(3L) == Status.NotFound)
-    assert(st(4L) == Status.Timeout)
-    // failed docs emit no doc rows (batch parity)
-    val docIds = res.flatMap(_._1).map(_.doc_id).toSet
-    assert(docIds == Set(graft.core.Ids.rootId(1L)))
   }
 
   test("extraction output equals the direct per-doc computation (plan-independent)") {

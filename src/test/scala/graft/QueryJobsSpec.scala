@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.ListenerDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -20,25 +17,11 @@ class QueryJobsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = "/root/testdata/sf0.01"
 
-  private final class JobCounter extends SparkListener {
-    val jobs = new AtomicInteger
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
-  }
-
   /** Sorted rows of the frame `build` returns, and the number of Spark jobs
     * that building and collecting it ran.
     */
-  private def jobsOf(build: => DataFrame): (Seq[String], Int) = {
-    val sc = spark.sparkContext
-    ListenerDrain(sc) // earlier events must not reach the new counter
-    val counter = new JobCounter
-    sc.addSparkListener(counter)
-    try {
-      val rows = build.collect().map(_.toString).toSeq.sorted
-      ListenerDrain(sc)
-      (rows, counter.jobs.get)
-    } finally sc.removeSparkListener(counter)
-  }
+  private def jobsOf(build: => DataFrame): (Seq[String], Int) =
+    JobCount(spark)(build.collect().map(_.toString).toSeq.sorted)
 
   private def clusters: DataFrame =
     Dedup.connectedComponents(
