@@ -3,6 +3,8 @@ package graft.pipeline
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.collection.OpenHashSet
 import graft.catalog.SnapshotTable
 import graft.core._
 import graft.core.route.Extract
@@ -43,8 +45,10 @@ object ExtractJob {
       /** false when the input is already bucketed on doc_id (the production
         * Iceberg layout): extraction then runs IN the scan stage with no
         * shuffle at all — the scale-correct plan for an embarrassingly
-        * parallel map. true re-balances unbucketed/skewed inputs via the
-        * salted repartition.
+        * parallel map. false thereby also asserts that rows with equal
+        * doc_ids share an input partition, which `run`'s returned counts
+        * rely on. true re-balances unbucketed/skewed inputs via the salted
+        * repartition.
         */
       shuffleInput: Boolean = true,
       /** Per-document parse deadline (reference watchdog,
@@ -115,6 +119,16 @@ object ExtractJob {
     * blacklist machinery (`ExtractionErrors` semantics).
     */
   def extractPartitions(input: Dataset[DocIn], cfg: JobConfig)
+  : Dataset[(Option[DocOut], Option[LineageRow])] = extract(input, cfg, None)
+
+  /** [[extractPartitions]], and when `mayRepeat` is given each task also
+    * adds 1 to it for every doc whose id could appear in more than one input
+    * row of the run without the task noticing otherwise: a doc_id the task
+    * has already seen (an O(docs per task) primitive id set), and, under
+    * `shuffleInput`, an oversized doc, which the salt may route away from a
+    * same-id copy that is not oversized.
+    */
+  private def extract(input: Dataset[DocIn], cfg: JobConfig, mayRepeat: Option[LongAccumulator])
   : Dataset[(Option[DocOut], Option[LineageRow])] = {
     val spark = input.sparkSession
     import spark.implicits._
@@ -123,11 +137,17 @@ object ExtractJob {
       val t0 = System.nanoTime()
       var docsDone = 0L
       var bytesDone = 0L
+      val seen = new OpenHashSet[Long]
       it.flatMap { doc =>
         val bytesIn =
           if (doc.spans == null) 0L
           else doc.spans.iterator
             .map(s => if (s.text == null) 0L else s.text.length.toLong).sum
+        mayRepeat.foreach { acc =>
+          if (seen.contains(doc.doc_id) || (cfg.shuffleInput && bytesIn > cfg.oversizedChars))
+            acc.add(1L)
+          else seen.add(doc.doc_id)
+        }
         val nIn = if (doc.spans == null) 0 else doc.spans.size
         val deadline =
           if (cfg.docTimeoutMillis > 0) System.nanoTime() + cfg.docTimeoutMillis * 1000000L
@@ -180,10 +200,13 @@ object ExtractJob {
   // reader sees it, and a writer that loses the race to v<N> re-publishes
   // on top of the winner. Run N+1 writes O(run N+1) bytes and never
   // rewrites history. `extracted` and `lineage` are read-time views of the
-  // current snapshot (on Iceberg: actual views / MERGE): extracted dedupes
-  // on doc_id (re-extracted rows are bit-identical by determinism, and only
-  // retried non-terminal docs ever recur); lineage keeps every attempt (it
-  // is a log — retries are part of the record).
+  // current snapshot (on Iceberg: actual views / MERGE). extracted dedupes
+  // on doc_id: doc rows are emitted only for SUCCESS, which is terminal, so
+  // a resumed run never re-extracts a committed doc; a doc id recurs only
+  // when the input repeats an id, when `lineagePrev` is not the output's
+  // own lineage, or when racing writers extract overlapping ids (the rows
+  // are bit-identical by determinism). lineage keeps every attempt (it is
+  // a log — retries are part of the record).
 
   /** Data dir ids of the current snapshot, oldest first — one read of the
     * snapshot file, no Spark job.
@@ -223,20 +246,56 @@ object ExtractJob {
       .agg(count(lit(1)).as("n_docs"), sum("lineage.n_spans_out").as("n_spans")))
 
   /** End-to-end incremental run (commit protocol above). Resumes against
-    * `lineagePrev` when given, else against the output's own lineage view —
-    * the Reporter.skip semantics (`Reporter.java:120-135`). Returns (total
-    * docs in the extracted view, total lineage rows) across all runs in the
-    * snapshot this run published.
+    * `lineagePrev` when given, else against the lineage view of the
+    * snapshot current when the run starts (its base) — the Reporter.skip
+    * semantics (`Reporter.java:120-135`). Returns (total docs in the
+    * extracted view, total lineage rows) across all runs in the snapshot
+    * this run published.
+    *
+    * Both totals are read from that snapshot's file, so on the normal path
+    * no Spark job runs after the write:
+    *  - lineage is the sum of the per-dir `lineage` counts. The view keeps
+    *    every row, so the sum is always exact.
+    *  - extracted is the snapshot's `extracted` summary: the base's total
+    *    plus this dir's doc rows. The sum equals the deduped view when the
+    *    run adds no doc id the base holds and none twice. Doc rows are
+    *    emitted only for SUCCESS, which is terminal, so a run resumed
+    *    against its own base's lineage re-extracts no committed doc. Distinct
+    *    input ids give distinct doc ids (root ids hash the input id, embed
+    *    ids their parent's id and ordinal), so inside the run an id recurs
+    *    only when the input repeats a doc_id. Equal ids share a task — the
+    *    salt is a function of doc_id for all but oversized docs, and
+    *    `shuffleInput = false` asserts doc_id-bucketed input — where the
+    *    task's id set sees the repeat.
+    *
+    * So the summary is recorded only when the commit lands directly on the
+    * base, no `lineagePrev` was given, and no task saw a possible repeat
+    * (see [[extract]]). Otherwise extracted is counted from the view, and
+    * the next clean run records it again, from that count of its base.
     */
   def run(spark: SparkSession, input: Dataset[DocIn], lineagePrev: Option[DataFrame],
           outDir: String, cfg: JobConfig = JobConfig()): (Long, Long) = {
-    val lineageView = lineagePrev.orElse(readLineage(spark, outDir))
+    val base = SnapshotTable.currentVersion(outDir)
+    val lineageView = lineagePrev.orElse(base.map(v => lineageOf(SnapshotTable.read(spark, outDir, Some(v)))))
     val pending = lineageView.map(resume(input, _)).getOrElse(input)
-    val combined = extractPartitions(prepare(pending, cfg), cfg).toDF("doc", "lineage")
-    val published = SnapshotTable.append(spark, outDir, combined)
-    val all = SnapshotTable.read(spark, outDir, Some(published))
-    (extractedOf(all).count(), lineageOf(all).count())
+    val mayRepeat = spark.sparkContext.longAccumulator
+    val combined = extract(prepare(pending, cfg), cfg, Some(mayRepeat)).toDF("doc", "lineage")
+    val published = SnapshotTable.append(spark, outDir, combined, summary = (v, dir) =>
+      if (v == base.getOrElse(0L) + 1 && lineagePrev.isEmpty && mayRepeat.isZero)
+        Map(ExtractedKey -> (extractedAt(spark, outDir, base) + dir.nonNull("doc")).toString)
+      else Map.empty)
+    val lineage = SnapshotTable.dirCounts(outDir, published).map(_._2.nonNull.getOrElse("lineage", 0L)).sum
+    (extractedAt(spark, outDir, Some(published)), lineage)
   }
+
+  private val ExtractedKey = "extracted"
+
+  /** Docs in the extracted view at `version` (0 before the first commit):
+    * the snapshot's recorded summary, else a count of the view.
+    */
+  private def extractedAt(spark: SparkSession, outDir: String, version: Option[Long]): Long =
+    version.fold(0L)(v => SnapshotTable.summary(outDir, v).get(ExtractedKey).map(_.toLong)
+      .getOrElse(extractedOf(SnapshotTable.read(spark, outDir, Some(v))).count()))
 
   /** Throughput-only variant for the bench harness: same plan shape, no
     * intermediate writes — extraction forced by a count over the combined

@@ -1,6 +1,8 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.catalog.SnapshotTable
 import graft.core._
@@ -206,5 +208,113 @@ class PipelineSpec extends AnyFunSuite {
       ExtractJob.JobConfig())
       .collect().flatMap(_._1).map(_.doc_id).sorted.toSeq
     assert(got == expected)
+  }
+
+  /** (docs in the extracted view, lineage rows) of snapshot `v` — the
+    * totals `run` must return for the snapshot it published.
+    */
+  private def viewsAt(out: String, v: Long): (Long, Long) = {
+    val all = SnapshotTable.read(spark, out, Some(v))
+    (all.filter(col("doc").isNotNull).select("doc.*").dropDuplicates("doc_id").count(),
+      all.filter(col("lineage").isNotNull).count())
+  }
+
+  private def recorded(out: String, v: Long): Option[String] =
+    SnapshotTable.summary(out, v).get("extracted")
+
+  test("building the snapshot and lineage reads launches no Spark job") {
+    val out = tmpDir()
+    ExtractJob.run(spark, corpus(5), None, out)
+    ExtractJob.run(spark, corpus(10), None, out)
+    val (_, jobs) = JobCount(spark) {
+      SnapshotTable.read(spark, out)
+      SnapshotTable.read(spark, out, Some(1))
+      ExtractJob.readLineage(spark, out).get
+    }
+    assert(jobs == 0)
+  }
+
+  test("a run launches only the jobs of its extraction write") {
+    val cfg = ExtractJob.JobConfig(partitions = 4)
+    def frame(in: Dataset[DocIn]): DataFrame =
+      ExtractJob.extractPartitions(ExtractJob.saltedRepartition(in, cfg), cfg).toDF("doc", "lineage")
+    val out = tmpDir()
+    val (_, writeFirst) = JobCount(spark)(frame(corpus(20)).write.parquet(tmpDir() + "/w"))
+    val (first, runFirst) = JobCount(spark)(ExtractJob.run(spark, corpus(20), None, out, cfg))
+    assert(runFirst == writeFirst, s"first run: $runFirst jobs, its write alone $writeFirst")
+    val (_, writeResume) = JobCount(spark)(
+      frame(ExtractJob.resume(corpus(30), ExtractJob.readLineage(spark, out).get))
+        .write.parquet(tmpDir() + "/w"))
+    val (second, runResume) = JobCount(spark)(ExtractJob.run(spark, corpus(30), None, out, cfg))
+    assert(runResume == writeResume, s"resume run: $runResume jobs, resume + write alone $writeResume")
+    assert(first == viewsAt(out, 1) && second == viewsAt(out, 2))
+    assert(first == (27L, 20L) && recorded(out, 2).contains(second._1.toString))
+  }
+
+  test("counts stay exact off the fast path: repeated input ids") {
+    import spark.implicits._
+    val out = tmpDir()
+    // ids 0..3 twice: identical copies share a task under the default salt
+    val (n1, l1) = ExtractJob.run(spark, corpus(10).union(corpus(4)), None, out)
+    assert((n1, l1) == viewsAt(out, 1) && l1 == 14 && recorded(out, 1).isEmpty)
+    // id 12 again with an oversized body: the salt may send it to another
+    // task than its plain copy
+    val cfg = ExtractJob.JobConfig(partitions = 8, oversizedChars = 1000)
+    val big = spark.createDataset(Seq(DocIn(12L, Array(SpanIn("text", "x" * 2000, "", 0)))))
+    val (n2, l2) = ExtractJob.run(spark, corpus(13).union(big), None, out, cfg)
+    assert((n2, l2) == viewsAt(out, 2) && recorded(out, 2).isEmpty)
+    // the next clean run records the total again, counted from its base
+    val (n3, l3) = ExtractJob.run(spark, corpus(16), None, out, cfg)
+    assert((n3, l3) == viewsAt(out, 3) && recorded(out, 3).contains(n3.toString))
+  }
+
+  test("counts stay exact off the fast path: a supplied lineagePrev") {
+    val out = tmpDir()
+    ExtractJob.run(spark, corpus(10), None, out)
+    assert(recorded(out, 1).contains(viewsAt(out, 1)._1.toString))
+    // docs 5..9 are terminal in the output but not in the supplied lineage
+    val prev = ExtractJob.readLineage(spark, out).get.filter(col("doc_id") < 5)
+    val (n2, l2) = ExtractJob.run(spark, corpus(12), Some(prev), out)
+    assert((n2, l2) == viewsAt(out, 2) && l2 == 17 && recorded(out, 2).isEmpty)
+    val (n3, l3) = ExtractJob.run(spark, corpus(14), None, out)
+    assert((n3, l3) == viewsAt(out, 3) && recorded(out, 3).contains(n3.toString))
+  }
+
+  test("counts stay exact off the fast path: racing writers over overlapping ids") {
+    import spark.implicits._
+    val out = tmpDir()
+    def docs(ids: Range) = spark.createDataset(ids.map(i =>
+      Corpus.synthesizeOne(i.toLong, s"alpha bravo charlie unit$i"))).coalesce(1)
+    PipelineSpec.RaceGate.reset()
+    // writer A resolves its (empty) base, then its extraction task waits
+    // until writer B, over ids 6..17, has committed v1
+    val a = new java.util.concurrent.FutureTask[(Long, Long)](() =>
+      ExtractJob.run(spark, docs(0 until 12).mapPartitions { it =>
+        PipelineSpec.RaceGate.holdA(); it }, None, out))
+    new Thread(a).start()
+    assert(PipelineSpec.RaceGate.aStarted.await(2, TimeUnit.MINUTES))
+    val b = ExtractJob.run(spark, docs(6 until 18), None, out)
+    PipelineSpec.RaceGate.bCommitted.countDown()
+    val aCounts = a.get(5, TimeUnit.MINUTES)
+    assert(SnapshotTable.snapshots(out) == Seq(1L, 2L))
+    assert(b == viewsAt(out, 1) && recorded(out, 1).contains(b._1.toString))
+    // A lost the race to v1 and landed on B's snapshot: ids 6..11 are in
+    // both dirs, so A's total is counted from the deduplicated view
+    assert(aCounts == viewsAt(out, 2) && aCounts._2 == 24 && recorded(out, 2).isEmpty)
+    assert(aCounts._1 < b._1 + SnapshotTable.dirCounts(out, 2).last._2.nonNull("doc"))
+    val (n3, l3) = ExtractJob.run(spark, docs(0 until 20), None, out)
+    assert((n3, l3) == viewsAt(out, 3) && recorded(out, 3).contains(n3.toString))
+  }
+}
+
+object PipelineSpec {
+  /** Orders two racing runs: A's extraction task signals that it started
+    * (so A has resolved its base) and then waits until B has committed.
+    */
+  object RaceGate {
+    @volatile var aStarted = new CountDownLatch(1)
+    @volatile var bCommitted = new CountDownLatch(1)
+    def reset(): Unit = { aStarted = new CountDownLatch(1); bCommitted = new CountDownLatch(1) }
+    def holdA(): Unit = { aStarted.countDown(); bCommitted.await(2, TimeUnit.MINUTES): Unit }
   }
 }

@@ -91,4 +91,31 @@ class SnapshotTableSpec extends AnyFunSuite {
     assert(SnapshotTable.read(spark, t).collect().map(_.getInt(0)).sorted.toSeq == Seq(2, 3))
     assert(SnapshotTable.snapshots(t) == Seq(1L, 2L, 3L))
   }
+
+  test("each dir's recorded counts equal its rows; time travel reads with its own schema") {
+    import spark.implicits._
+    val t = tmp()
+    SnapshotTable.append(spark, t, Seq((Option(1), "a"), (None, "b")).toDF("x", "y"))
+    SnapshotTable.append(spark, t, Seq((Option(3), null: String)).toDF("x", "y"),
+      summary = (v, c) => Map("k\t=1" -> s"v$v rows=${c.rows}\n"))
+    SnapshotTable.overwrite(spark, t, Seq((4, "d", 7L), (5, null, 8L)).toDF("x", "y", "z w=1"))
+    SnapshotTable.deleteWhere(spark, t, col("x") === 4)
+    assert(SnapshotTable.snapshots(t) == Seq(1L, 2L, 3L, 4L))
+    for (v <- SnapshotTable.snapshots(t); (name, c) <- SnapshotTable.dirCounts(t, v)) {
+      val rows = spark.read.parquet(s"$t/data/$name")
+      assert(c.rows == rows.count(), s"v$v dir $name")
+      assert(c.nonNull == rows.columns.map(k => k -> rows.filter(col(s"`$k`").isNotNull).count()).toMap,
+        s"v$v dir $name")
+    }
+    assert(SnapshotTable.dirCounts(t, 2).map(_._2.rows) == Seq(2L, 1L))
+    // the summary is the one the writer gave for the version it landed on
+    assert(SnapshotTable.summary(t, 1).isEmpty)
+    assert(SnapshotTable.summary(t, 2) == Map("k\t=1" -> "v2 rows=1\n"))
+    // v1 reads with the schema it recorded, not the newest write's
+    val v1 = SnapshotTable.read(spark, t, Some(1))
+    assert(v1.schema == spark.read.parquet(s"$t/data/${SnapshotTable.snapshotDirs(t, 1).head}").schema)
+    assert(v1.as[(Option[Int], String)].collect().toSet == Set((Some(1), "a"), (None, "b")))
+    assert(SnapshotTable.read(spark, t).as[(Int, Option[String], Long)].collect().toSeq ==
+      Seq((5, None, 8L)))
+  }
 }
